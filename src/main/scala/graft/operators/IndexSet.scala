@@ -2,8 +2,14 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -59,7 +65,14 @@ import org.apache.spark.sql.types._
   * prune on (seg, tb) partition dirs then row groups; an append costs
   * one increment-sized write + one vocabulary-sized df merge; a delete
   * rewrites only touched partitions' survivors. The manifest itself is
-  * O(segments) bytes; compaction bounds segment count.
+  * O(segments) bytes; compaction bounds segment count. A snapshot costs
+  * one manifest read plus a driver listing of the manifest's live
+  * (segment, partition) dirs and no Spark job: every component reads
+  * under its pinned schema (no footer inference), from a file index
+  * built from that listing (no parallel partition discovery), and the
+  * codebook is read straight from its parquet file. The listing is
+  * taken afresh on every load, so a root deleted and republished at
+  * the same path never serves stale files.
   *
   * Single-writer contract: mutations are serialized by the caller (a
   * production deployment runs maintenance from one scheduler). The
@@ -100,10 +113,9 @@ object IndexSet {
   final case class HybridSnapshot(manifest: HybridManifest,
       bm25: Retrieval.Bm25Index, pq: Quantize.PqIndex, docs: DataFrame)
 
-  /** Segment/generation ids are UN-padded decimals ("seg=17"): Hive
-    * partition-value type inference parses a zero-padded "000000017" to
-    * the integer 17, so a padded dir name would not round-trip through
-    * the inferred seg column. Manifest FILE names pad for lexical sort.
+  /** Segment/generation ids are UN-padded decimals ("seg=17"), so the
+    * dir name, the manifest id and the seg column's value are the same
+    * text. Manifest FILE names pad for lexical sort.
     */
   private def segId(v: Long): String = v.toString
 
@@ -190,6 +202,31 @@ object IndexSet {
   private def bookRoot(root: String) = s"$root/pq/book"
   private def docsRoot(root: String) = s"$root/docs"
 
+  /** A component's on-disk layout, pinned beside the writer that sets
+    * it: the data columns in the files and the partition columns the
+    * directories encode, `seg` outermost. Reads use these instead of
+    * inferring them from parquet footers and directory names.
+    * IndexSetSpec checks each against what the writers produce.
+    */
+  private[graft] final case class Layout(data: StructType, parts: StructType)
+
+  private def layout(data: StructType, partCol: String) = Layout(data,
+    StructType(Seq(StructField("seg", LongType), StructField(partCol, IntegerType))))
+
+  private[graft] val PostingsLayout = layout(StructType(Seq(
+    StructField("doc_id", LongType), StructField("term", StringType),
+    StructField("tf", LongType), StructField("dl", LongType))), "tb")
+  private[graft] val DlLayout = layout(StructType(Seq(
+    StructField("doc_id", LongType), StructField("dl", LongType))), "db")
+  private[graft] val DocsLayout = layout(StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType))), "db")
+  private[graft] val CodesLayout = layout(StructType(Seq(
+    StructField("vec_id", LongType), StructField("code", LongType))), "cell")
+  private[graft] val DfSchema = StructType(Seq(
+    StructField("term", StringType), StructField("df", LongType)))
+  private[graft] val CoarseSchema = StructType(Seq(
+    StructField("cell", IntegerType), StructField("ccent", ArrayType(DoubleType))))
+
   private def writePostingsSeg(postings: DataFrame, root: String, id: String): Unit =
     postings.withColumn("tb",
         pmod(graft.functions.TextFunctions.md5Long(col("term")),
@@ -223,38 +260,91 @@ object IndexSet {
 
   // --- snapshot assembly ---------------------------------------------------
 
-  private def partDirs(fs: FileSystem, segDir: Path): Seq[String] =
-    if (!fs.exists(segDir)) Seq.empty
-    else fs.listStatus(segDir).filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.contains("=")).toSeq.sorted
+  /** The data files of one directory, skipping what Spark's own listing
+    * hides (`_SUCCESS`, `.crc` checksums, in-flight copies).
+    */
+  private def dataFiles(fs: FileSystem, dir: Path): Array[FileStatus] =
+    fs.listStatus(dir).filter { f =>
+      val nm = f.getPath.getName
+      f.isFile && !nm.startsWith("_") && !nm.startsWith(".") &&
+        !nm.endsWith("._COPYING_")
+    }
 
   /** Assemble a component from its manifest segments: each segment's
-    * partition dirs minus its exclusions, read with basePath so the
-    * partition columns survive. `keepSeg` retains the seg column for
-    * mutation planning (per-segment touched-partition lists).
+    * partition dirs minus its exclusions, listed here on the driver and
+    * handed to Spark as a ready file index under the pinned layout, so
+    * the read starts no schema-inference or partition-discovery job.
+    * A segment dir the manifest names must exist (a missing one would
+    * silently serve part of the corpus); one with no partition dirs is
+    * valid — a delete that empties every partition it touched writes
+    * exactly that. `keepSeg` retains the seg column for mutation
+    * planning (per-segment touched-partition lists).
     */
   private def readSegs(s: SparkSession, compRoot: String, segs: Seq[SegRef],
-      keepSeg: Boolean = false): DataFrame = {
+      lay: Layout, keepSeg: Boolean = false): DataFrame = {
     val fs = fsOf(s, compRoot)
-    val dirs = segs.flatMap { seg =>
-      val segDir = new Path(compRoot, s"seg=${seg.id}")
+    val partCol = lay.parts.fields(1).name
+    val parts = segs.flatMap { seg =>
+      val segDir = fs.makeQualified(new Path(compRoot, s"seg=${seg.id}"))
+      val listed = try fs.listStatus(segDir) catch {
+        case _: java.io.FileNotFoundException => throw new IllegalStateException(
+          s"segment dir $segDir named by the manifest is missing")
+      }
       val excluded = seg.excluded.toSet
-      partDirs(fs, segDir).filterNot(excluded)
-        .map(p => new Path(segDir, p).toString)
+      listed.filter(d => d.isDirectory && d.getPath.getName.startsWith(s"$partCol=") &&
+          !excluded(d.getPath.getName))
+        .sortBy(_.getPath.getName).toSeq
+        .map { d =>
+          val v = d.getPath.getName.stripPrefix(s"$partCol=").toInt
+          (PartitionPath(InternalRow(seg.id.toLong, v), d.getPath),
+            dataFiles(fs, d.getPath))
+        }
     }
-    require(dirs.nonEmpty,
-      s"component $compRoot has no live partitions — the manifest is empty")
-    val df = s.read.option("basePath", compRoot).parquet(dirs: _*)
+    val listing = parts.map { case (p, files) => p.path -> files }.toMap
+    val index = new InMemoryFileIndex(s, parts.map(_._1.path), Map.empty, None,
+      new FileStatusCache {
+        override def getLeafFiles(path: Path): Option[Array[FileStatus]] = listing.get(path)
+        override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+        override def invalidateAll(): Unit = ()
+      },
+      Some(PartitionSpec(lay.parts, parts.map(_._1))))
+    val df = s.baseRelationToDataFrame(HadoopFsRelation(index, lay.parts, lay.data,
+      None, new ParquetFileFormat, Map.empty)(s))
     if (keepSeg) df else df.drop("seg")
   }
 
-  private def loadFit(s: SparkSession, root: String, gen: String): (DataFrame, Array[Double]) = {
-    val bookRow = s.read.parquet(s"${bookRoot(root)}/gen=$gen").collect().head
-    require(bookRow.getSeq[Int](1) == Seq(Quantize.PqM, Quantize.PqK, Quantize.PqD),
-      s"published fit dims ${bookRow.getSeq[Int](1)} != engine (M, K, D)")
-    (s.read.parquet(s"${coarseRoot(root)}/gen=$gen"),
-      bookRow.getSeq[Double](0).toArray)
+  /** A segment this mutation just staged, read back under its layout. */
+  private def staged(s: SparkSession, compRoot: String, id: String,
+      lay: Layout): DataFrame = readSegs(s, compRoot, Seq(SegRef(id, Nil)), lay)
+
+  private def readDf(s: SparkSession, root: String, gen: String): DataFrame =
+    s.read.schema(DfSchema).parquet(s"${dfRoot(root)}/gen=$gen")
+
+  /** The 8 KB codebook, read on the driver straight from its parquet
+    * file (Spark's list layout: `<field>.list[i].element`) — a Spark
+    * read would start a job to collect one row.
+    */
+  private def readBook(s: SparkSession, dir: Path): Array[Double] = {
+    val conf = s.sparkContext.hadoopConfiguration
+    val rows = dataFiles(dir.getFileSystem(conf), dir).iterator.flatMap { f =>
+      val r = ParquetReader.builder(new GroupReadSupport(), f.getPath).withConf(conf).build()
+      try Option(r.read()) finally r.close()
+    }
+    require(rows.hasNext, s"no codebook row under $dir")
+    val row = rows.next()
+    def list(field: String) = {
+      val l = row.getGroup(field, 0)
+      (0 until l.getFieldRepetitionCount("list")).map(l.getGroup("list", _))
+    }
+    val dims = list("dims").map(_.getInteger("element", 0))
+    require(dims == Seq(Quantize.PqM, Quantize.PqK, Quantize.PqD),
+      s"published fit dims $dims != engine (M, K, D)")
+    list("book").map(_.getDouble("element", 0)).toArray
   }
+
+  private def loadFit(s: SparkSession, root: String, gen: String): (DataFrame, Array[Double]) =
+    (s.read.schema(CoarseSchema).parquet(s"${coarseRoot(root)}/gen=$gen"),
+      readBook(s, new Path(s"${bookRoot(root)}/gen=$gen")))
 
   /** Resolve ONE version (default: current) into an immutable snapshot.
     * This is the only read path — every component comes from the same
@@ -266,12 +356,13 @@ object IndexSet {
     val (coarse, book) = loadFit(s, root, m.pqFitGen)
     HybridSnapshot(m,
       Retrieval.Bm25Index(
-        readSegs(s, postingsRoot(root), m.bm25Postings),
-        s.read.parquet(s"${dfRoot(root)}/gen=${m.bm25DfGen}"),
-        readSegs(s, dlRoot(root), m.bm25Dl),
+        readSegs(s, postingsRoot(root), m.bm25Postings, PostingsLayout),
+        readDf(s, root, m.bm25DfGen),
+        readSegs(s, dlRoot(root), m.bm25Dl, DlLayout),
         m.nDocs, m.sumDl),
-      Quantize.PqIndex(coarse, book, readSegs(s, codesRoot(root), m.pqCodes)),
-      readSegs(s, docsRoot(root), m.docs))
+      Quantize.PqIndex(coarse, book,
+        readSegs(s, codesRoot(root), m.pqCodes, CodesLayout)),
+      readSegs(s, docsRoot(root), m.docs, DocsLayout))
   }
 
   // --- lifecycle -------------------------------------------------------
@@ -295,7 +386,7 @@ object IndexSet {
     // staged read is one column-pruned pass with map-side term counts.
     // dl stays on its in-memory frame: the raw-toks aggregate map-side
     // combines to doc granularity, a light shuffle
-    writeDfGen(s.read.parquet(s"${postingsRoot(root)}/seg=$id")
+    writeDfGen(staged(s, postingsRoot(root), id, PostingsLayout)
       .groupBy("term").agg(count(lit(1)).as("df")), root, id)
     val pq = Quantize.buildIndexFrom(vecs)
     writeFitGen(pq, root, id)
@@ -340,8 +431,8 @@ object IndexSet {
     writePostingsSeg(inc.postings, root, id)
     writeDocKeyedSeg(inc.dl, dlRoot(root), id)
     // the increment's df derives from its staged seg, as in publish
-    val mergedDf = s.read.parquet(s"${dfRoot(root)}/gen=${m.bm25DfGen}")
-      .unionByName(s.read.parquet(s"${postingsRoot(root)}/seg=$id")
+    val mergedDf = readDf(s, root, m.bm25DfGen)
+      .unionByName(staged(s, postingsRoot(root), id, PostingsLayout)
         .groupBy("term").agg(count(lit(1)).as("df")))
       .groupBy("term").agg(sum("df").as("df"))
     writeDfGen(mergedDf, root, id)
@@ -393,26 +484,24 @@ object IndexSet {
     val vVictims = ids.distinct.toDF("vec_id")
 
     if (ids.distinct.size >= Retrieval.deleteRepublishFraction(s) * m.nDocs) {
-      val survPost = readSegs(s, postingsRoot(root), m.bm25Postings)
+      val survPost = readSegs(s, postingsRoot(root), m.bm25Postings, PostingsLayout)
         .join(victims, Seq("doc_id"), "left_anti").drop("tb")
       writePostingsSeg(survPost, root, id)
-      val survDl = readSegs(s, dlRoot(root), m.bm25Dl)
+      val survDl = readSegs(s, dlRoot(root), m.bm25Dl, DlLayout)
         .join(victims, Seq("doc_id"), "left_anti").drop("db")
       writeDocKeyedSeg(survDl, dlRoot(root), id)
       // df/stats from the STAGED survivors so every piece derives from
       // one corpus state (and nothing victim-sized reaches the driver)
-      val staged = s.read.option("basePath", postingsRoot(root))
-        .parquet(s"${postingsRoot(root)}/seg=$id")
-      writeDfGen(staged.groupBy("term").agg(count(lit(1)).as("df")), root, id)
-      val st = s.read.option("basePath", dlRoot(root))
-        .parquet(s"${dlRoot(root)}/seg=$id")
+      writeDfGen(staged(s, postingsRoot(root), id, PostingsLayout)
+        .groupBy("term").agg(count(lit(1)).as("df")), root, id)
+      val st = staged(s, dlRoot(root), id, DlLayout)
         .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("s"))
         .collect()(0)
       require(st.getLong(0) > 0,
         "deleting every document empties the index set — nothing to republish")
-      writeCodesSeg(readSegs(s, codesRoot(root), m.pqCodes)
+      writeCodesSeg(readSegs(s, codesRoot(root), m.pqCodes, CodesLayout)
         .join(vVictims, Seq("vec_id"), "left_anti"), root, id)
-      writeDocKeyedSeg(readSegs(s, docsRoot(root), m.docs)
+      writeDocKeyedSeg(readSegs(s, docsRoot(root), m.docs, DocsLayout)
         .join(victims, Seq("doc_id"), "left_anti").drop("db"),
         docsRoot(root), id)
       beforeCommit()
@@ -435,7 +524,8 @@ object IndexSet {
         .distinct().collect()
         .map(r => (r.getLong(0), r.getInt(1))).toSeq
 
-    val postings = readSegs(s, postingsRoot(root), m.bm25Postings, keepSeg = true)
+    val postings = readSegs(s, postingsRoot(root), m.bm25Postings, PostingsLayout,
+      keepSeg = true)
     val pTouched = touchPairs(postings, "doc_id", victims, "tb")
     val lostRows = postings.join(broadcast(victims), Seq("doc_id"))
       .groupBy("term").agg(count(lit(1)).as("lost")).collect()
@@ -443,16 +533,16 @@ object IndexSet {
       java.util.Arrays.asList(lostRows: _*),
       StructType(Seq(StructField("term", StringType),
         StructField("lost", LongType))))
-    val dl = readSegs(s, dlRoot(root), m.bm25Dl, keepSeg = true)
+    val dl = readSegs(s, dlRoot(root), m.bm25Dl, DlLayout, keepSeg = true)
     val victimSt = dl.join(broadcast(victims), Seq("doc_id"))
       .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("s"))
       .collect()(0)
     require(m.nDocs - victimSt.getLong(0) > 0,
       "deleting every document empties the index set — republish instead")
     val dTouched = touchPairs(dl, "doc_id", victims, "db")
-    val codes = readSegs(s, codesRoot(root), m.pqCodes, keepSeg = true)
+    val codes = readSegs(s, codesRoot(root), m.pqCodes, CodesLayout, keepSeg = true)
     val cTouched = touchPairs(codes, "vec_id", vVictims, "cell")
-    val store = readSegs(s, docsRoot(root), m.docs, keepSeg = true)
+    val store = readSegs(s, docsRoot(root), m.docs, DocsLayout, keepSeg = true)
     val sTouched = touchPairs(store, "doc_id", victims, "db")
 
     // survivor segment: ONLY the touched (segment, partition) pairs'
@@ -488,7 +578,7 @@ object IndexSet {
           .join(broadcast(victims), Seq("doc_id"), "left_anti")
           .drop("seg", "db"),
         docsRoot(root), id)
-    val newDf = s.read.parquet(s"${dfRoot(root)}/gen=${m.bm25DfGen}")
+    val newDf = readDf(s, root, m.bm25DfGen)
       .join(broadcast(lost), Seq("term"), "left")
       .select(col("term"), (col("df") - coalesce(col("lost"), lit(0L))).as("df"))
       .filter(col("df") > 0)
@@ -528,12 +618,13 @@ object IndexSet {
     val v2 = m.version + 1
     val id = segId(v2)
     writePostingsSeg(
-      readSegs(s, postingsRoot(root), m.bm25Postings).drop("tb"), root, id)
+      readSegs(s, postingsRoot(root), m.bm25Postings, PostingsLayout).drop("tb"),
+      root, id)
     writeDocKeyedSeg(
-      readSegs(s, dlRoot(root), m.bm25Dl).drop("db"), dlRoot(root), id)
-    writeCodesSeg(readSegs(s, codesRoot(root), m.pqCodes), root, id)
+      readSegs(s, dlRoot(root), m.bm25Dl, DlLayout).drop("db"), dlRoot(root), id)
+    writeCodesSeg(readSegs(s, codesRoot(root), m.pqCodes, CodesLayout), root, id)
     writeDocKeyedSeg(
-      readSegs(s, docsRoot(root), m.docs).drop("db"), docsRoot(root), id)
+      readSegs(s, docsRoot(root), m.docs, DocsLayout).drop("db"), docsRoot(root), id)
     val m2 = m.copy(version = v2,
       bm25Postings = Seq(SegRef(id, Nil)), bm25Dl = Seq(SegRef(id, Nil)),
       pqCodes = Seq(SegRef(id, Nil)), docs = Seq(SegRef(id, Nil)))

@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IndexSet, Quantize, Retrieval}
@@ -358,5 +361,125 @@ class IndexSetSpec extends GraftSpec {
       "a pinned snapshot must never fuse across two manifest versions")
     assert(out.select("corpus_version").distinct().collect()
       .map(_.getLong(0)).toSeq === Seq(1L))
+  }
+
+  /** Spark jobs started while `body` runs. A listener records every job
+    * start; a marked one-task sentinel job before and after `body`
+    * drains the bus, since a listener receives its events in order, so
+    * when the closing sentinel arrives every job of `body` is in.
+    */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.sentinel"
+    val seen = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.put(Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .getOrElse("job"))
+    }
+    def jobsBefore(tag: String): Int = {
+      sc.setLocalProperty(key, tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      Iterator.continually(Option(seen.poll(60, TimeUnit.SECONDS))
+          .getOrElse(fail(s"sentinel job $tag never reached the listener")))
+        .takeWhile(_ != tag).size
+    }
+    sc.addSparkListener(listener)
+    try {
+      jobsBefore("open")
+      val out = body
+      (out, jobsBefore("close"))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def partitionDirs(df: org.apache.spark.sql.DataFrame): Int =
+    df.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent.toString).distinct.length
+
+  private def rmTree(path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+  }
+
+  test("loadSnapshot starts no Spark job, fresh and over >32 partition dirs per component") {
+    val root = tmp("ixset_nojob")
+    val baseD = docs.filter(col("doc_id") % 5 =!= 0)
+    val baseV = vecs.filter(col("vec_id") % 5 =!= 0)
+    IndexSet.publish(spark, baseD, baseV, root)
+    val (_, freshJobs) = jobsDuring(IndexSet.loadSnapshot(spark, root))
+    assert(freshJobs === 0, "a fresh publish's snapshot must load without a Spark job")
+
+    // three appends and a surgical delete (3 of 500 docs, below the
+    // republish fraction): every component now spans more than 32
+    // partition dirs, Spark's threshold for a parallel listing job
+    (0 until 3).foreach { k =>
+      IndexSet.append(spark,
+        docs.filter(col("doc_id") % 5 === 0 && col("doc_id") / 5 % 3 === k),
+        vecs.filter(col("vec_id") % 5 === 0 && col("vec_id") / 5 % 3 === k), root)
+    }
+    val victims = Seq(7L, 15L, 333L)
+    val m = IndexSet.delete(spark, victims, root)
+    assert(m.bm25Postings.size === 5 && m.pqCodes.size === 5,
+      "the delete must take the surgical path and stage a survivor segment")
+    val (snap, jobs) = jobsDuring(IndexSet.loadSnapshot(spark, root))
+    assert(jobs === 0, "a multi-segment snapshot must load without a Spark job")
+    Seq("postings" -> snap.bm25.postings, "dl" -> snap.bm25.dl,
+      "codes" -> snap.pq.codes, "docs" -> snap.docs).foreach { case (name, df) =>
+      assert(partitionDirs(df) > 32, s"$name spans only ${partitionDirs(df)} partition dirs")
+    }
+    val survD = docs.filter(!col("doc_id").isin(victims.map(Long.box): _*))
+    val survV = vecs.filter(!col("vec_id").isin(victims.map(Long.box): _*))
+    assert(snapRows(snap) === frozenFitRows(survD, baseV, survV))
+  }
+
+  test("pinned layouts equal the schemas the writers produce") {
+    val root = tmp("ixset_layout")
+    IndexSet.publish(spark, docs.filter(col("doc_id") % 5 =!= 0),
+      vecs.filter(col("vec_id") % 5 =!= 0), root)
+    IndexSet.append(spark, docs.filter(col("doc_id") % 5 === 0),
+      vecs.filter(col("vec_id") % 5 === 0), root)
+    IndexSet.delete(spark, Seq(7L, 15L), root)
+    IndexSet.compact(spark, root)
+    // every segment each writer path staged: publish, append, delete, compact
+    Seq("bm25/postings" -> IndexSet.PostingsLayout, "bm25/dl" -> IndexSet.DlLayout,
+      "pq/codes" -> IndexSet.CodesLayout, "docs" -> IndexSet.DocsLayout).foreach {
+      case (comp, lay) =>
+        (1 to 4).foreach { seg =>
+          val read = spark.read.parquet(s"$root/$comp/seg=$seg")
+          assert(read.schema === lay.data.add(lay.parts.fields(1)),
+            s"$comp seg=$seg wrote ${read.schema.simpleString}")
+        }
+    }
+    (1 to 3).foreach { gen =>
+      assert(spark.read.parquet(s"$root/bm25/df/gen=$gen").schema === IndexSet.DfSchema)
+    }
+    assert(spark.read.parquet(s"$root/pq/coarse/gen=1").schema === IndexSet.CoarseSchema)
+  }
+
+  test("a root deleted and republished at the same path serves the new corpus") {
+    val root = tmp("ixset_repub")
+    IndexSet.publish(spark, docs.filter(col("doc_id") % 2 === 0),
+      vecs.filter(col("vec_id") % 2 === 0), root)
+    val first = IndexSet.loadSnapshot(spark, root)
+    assert(first.docs.count() === docs.filter(col("doc_id") % 2 === 0).count())
+    rmTree(root)
+    val d2 = docs.filter(col("doc_id") % 2 === 1)
+    val v2 = vecs.filter(col("vec_id") % 2 === 1)
+    IndexSet.publish(spark, d2, v2, root)
+    val snap = IndexSet.loadSnapshot(spark, root)
+    assert(snap.docs.select("doc_id").collect().map(_.getLong(0)).toSet ===
+      d2.select("doc_id").collect().map(_.getLong(0)).toSet)
+    assert(snapRows(snap) === memRows(d2, v2))
+  }
+
+  test("a segment dir missing from disk fails the load and names the dir") {
+    val root = tmp("ixset_missing")
+    IndexSet.publish(spark, docs.filter(col("doc_id") % 5 =!= 0),
+      vecs.filter(col("vec_id") % 5 =!= 0), root)
+    IndexSet.append(spark, docs.filter(col("doc_id") % 5 === 0),
+      vecs.filter(col("vec_id") % 5 === 0), root)
+    rmTree(s"$root/bm25/dl/seg=2")
+    val err = intercept[IllegalStateException](IndexSet.loadSnapshot(spark, root))
+    assert(err.getMessage.contains("bm25/dl/seg=2") && err.getMessage.contains("missing"),
+      err.getMessage)
   }
 }
